@@ -2,8 +2,10 @@ package graft.icelite
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -108,7 +110,6 @@ final class IceLiteTable private[icelite] (
     * live rows, no engine metadata columns.
     */
   def read(): DataFrame = {
-    import org.apache.spark.sql.functions.{col, not}
     readMerged(snap.buckets)
       .where(not(col(IceLite.TOMB)))
       .drop(IceLite.metaColumns: _*)
@@ -147,23 +148,9 @@ final class IceLiteTable private[icelite] (
     * dirty buckets only — clean buckets always bypass.
     */
   private def mergedOf(s: IceSnapshot, buckets: Seq[Int]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val sm = s.summary
-    // null-key rows are truncate markers; rows at/below the truncate
-    // floor were wiped by a TRUNCATE (E3) — both invisible to readers
-    def visible(df: DataFrame): DataFrame =
-      df.where(col(s.keyCol).isNotNull &&
-        (col(IceLite.VC) > sm.truncCommit ||
-          (col(IceLite.VC) === sm.truncCommit && col(IceLite.VL) > sm.truncChange)))
-    def lww(df: DataFrame): DataFrame = {
-      graft.plans.LwwMaxBy.register(spark)
-      val payloadSql = df.columns.map(c => s"`$c`").mkString("struct(", ", ", ")")
-      df.groupBy(col(s.keyCol).as("__k"))
-        .agg(expr(s"lww_max_by($payloadSql, `${IceLite.VC}`, `${IceLite.VL}`)").as("w"))
-        .select(col("w.*"))
-    }
+    import IceLite.{lww, visible}
     val (dirty, clean) = buckets.partition(b => s.deltas.getOrElse(b, Nil).nonEmpty)
-    val cleanDf = visible(scanFiles(s, clean.flatMap(b => s.base.getOrElse(b, Nil))))
+    val cleanDf = visible(scanFiles(s, clean.flatMap(b => s.base.getOrElse(b, Nil))), s)
     if (dirty.isEmpty) return cleanDf
     val deltaFiles = dirty.flatMap(b => s.deltas.getOrElse(b, Nil))
     val baseFiles = dirty.flatMap(b => s.base.getOrElse(b, Nil))
@@ -203,15 +190,15 @@ final class IceLiteTable private[icelite] (
         dirtyBytes <= IceLite.smallMergedReadBytes) {
       // chain too large to broadcast (or whole dirty set too small to
       // be worth the split): global LWW over the dirty buckets
-      val raw = visible(scanFiles(s, baseFiles ++ deltaFiles))
-      return cleanDf.unionByName(lww(raw))
+      val raw = visible(scanFiles(s, baseFiles ++ deltaFiles), s)
+      return cleanDf.unionByName(lww(raw, s.keyCol))
     }
-    val deltaW = lww(visible(scanFiles(s, deltaFiles)))
+    val deltaW = lww(visible(scanFiles(s, deltaFiles), s), s.keyCol)
     val deltaKeys = deltaW.select(col(s.keyCol))
-    val baseDf = visible(scanFiles(s, baseFiles))
+    val baseDf = visible(scanFiles(s, baseFiles), s)
     val untouched = baseDf.join(broadcast(deltaKeys), Seq(s.keyCol), "left_anti")
     val touched = baseDf.join(broadcast(deltaKeys), Seq(s.keyCol), "left_semi")
-    val merged = lww(touched.unionByName(deltaW))
+    val merged = lww(touched.unionByName(deltaW), s.keyCol)
     cleanDf.unionByName(untouched).unionByName(merged)
   }
 
@@ -222,7 +209,6 @@ final class IceLiteTable private[icelite] (
     * metadata-only pruning a 100 TB table needs for serving-style reads.
     */
   def lookup(keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, not}
     val buckets = keys.map(k => IceLite.bucketOf(k, snap.numBuckets)).distinct
     readMerged(buckets)
       .where(not(col(IceLite.TOMB)) &&
@@ -251,7 +237,6 @@ final class IceLiteTable private[icelite] (
     * `gcOrphans` bound how far back the feed reaches.
     */
   def changesBetween(fromExclusive: Long, toInclusive: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
     val newFiles = IceLite.changedDataFiles(root, fromExclusive, toInclusive)
     val latest =
       if (toInclusive > fromExclusive) IceLite.readSnapshotFile(root, toInclusive)
@@ -284,7 +269,6 @@ final class IceLiteTable private[icelite] (
 
   /** Time travel: read the table as of an older snapshot id. */
   def readAt(snapshotId: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, not}
     val s = IceLite.readSnapshotFile(root, snapshotId)
     mergedOf(s, s.buckets)
       .where(not(col(IceLite.TOMB)))
@@ -311,6 +295,31 @@ final class IceLiteTable private[icelite] (
     val ok = IceLite.writeSnapshotAtomic(root, next)
     if (ok) snap = next
     ok
+  }
+
+  /** The optimistic commit loop every table rewrite goes through.
+    * `build` derives the next version's content from the current one,
+    * or returns None when nothing is left to publish (a batch another
+    * driver already committed, a fold a concurrent writer invalidated);
+    * the loop stamps the version ids and commits. On losing the version
+    * race it re-reads the table and rebuilds. The first attempt builds
+    * on [[current]], so an uncontended commit adds no metadata read.
+    * Returns the committed snapshot, None when `build` declined; throws
+    * after 20 lost races.
+    */
+  private[graft] def commitWith(build: IceSnapshot => Option[IceSnapshot]): Option[IceSnapshot] = {
+    var cur = snap
+    var attempts = 0
+    while (attempts < 20) {
+      attempts += 1
+      val next = build(cur) match {
+        case Some(s) => s.copy(snapshotId = cur.snapshotId + 1, parentId = cur.snapshotId)
+        case None => return None
+      }
+      if (commit(next)) return Some(next)
+      cur = refresh()
+    }
+    throw new IllegalStateException(s"commit contention at $root: gave up after $attempts attempts")
   }
 
   /** Schema history: every committed snapshot's schema, oldest first —
@@ -455,26 +464,101 @@ object IceLite {
     * merge-on-read skips the broadcast split and runs one global LWW
     * exchange over the dirty buckets: shuffling a few KB once is
     * cheaper than two broadcast-exchange sub-jobs per read. Identical
-    * rows either way; `GRAFT_SMALL_MERGED_READ_BYTES` overrides (0
-    * disables — the plan-shape specs pin the broadcast path that way).
+    * rows either way; 0 disables (the plan-shape specs pin the
+    * broadcast path that way).
     */
-  var smallMergedReadBytes: Long =
-    sys.env.get("GRAFT_SMALL_MERGED_READ_BYTES").map(_.toLong).getOrElse(8L << 20)
+  var smallMergedReadBytes: Long = 8L << 20
 
-  /** Driver-side bucket function — MUST equal Spark's
-    * `pmod(hash(key), n)` (murmur3 of the UTF8 bytes, seed 42).
+  /** THE bucket of a key: murmur3 of the UTF8 bytes, seed 42 — equal to
+    * Spark's `pmod(hash(key), n)` ([[bucketCol]]) and therefore to its
+    * HashPartitioning on the key. Driver-side pruning, the DSv2 bucket
+    * transform and the v2 writer all call this.
     */
-  def bucketOf(key: String, numBuckets: Int): Int = {
-    val h = org.apache.spark.unsafe.types.UTF8String.fromString(key).hashCode()
-    // hashCode of UTF8String is murmur3 seed 42 — same as catalyst hash()
+  private[icelite] def bucketOf(key: UTF8String, numBuckets: Int): Int = {
+    val h = key.hashCode() // murmur3 seed 42, the same as catalyst hash()
     ((h % numBuckets) + numBuckets) % numBuckets
   }
+
+  def bucketOf(key: String, numBuckets: Int): Int =
+    bucketOf(UTF8String.fromString(key), numBuckets)
+
+  /** [[bucketOf]] as a column expression. */
+  private[graft] def bucketCol(key: Column, numBuckets: Int): Column =
+    pmod(hash(key), lit(numBuckets))
 
   def withMeta(schema: StructType): StructType =
     StructType(schema.fields ++ Seq(
       org.apache.spark.sql.types.StructField(VC, org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField(VL, org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField(TOMB, org.apache.spark.sql.types.BooleanType, nullable = false)))
+
+  /** Stored rows a reader may see at snapshot `at`: null-key rows are
+    * truncate markers, and rows at or below the truncate floor were
+    * wiped by a TRUNCATE (E3).
+    */
+  private[icelite] def visible(df: DataFrame, at: IceSnapshot): DataFrame = {
+    val sm = at.summary
+    df.where(col(at.keyCol).isNotNull &&
+      (col(VC) > sm.truncCommit || (col(VC) === sm.truncCommit && col(VL) > sm.truncChange)))
+  }
+
+  /** THE LWW fold of stored rows — merge-on-read (both read paths),
+    * compaction, the apply's inline fold and rebucket all resolve keys
+    * here: one max-(__vc, __vl) row per key, tombstones kept. Returns
+    * the grouping key `__k` and the winning row as struct `w`; [[lww]]
+    * flattens it.
+    */
+  private[icelite] def lwwByKey(df: DataFrame, keyCol: String): DataFrame = {
+    graft.plans.LwwMaxBy.register(df.sparkSession)
+    val payloadSql = df.columns.map(c => s"`$c`").mkString("struct(", ", ", ")")
+    df.groupBy(col(keyCol).as("__k"))
+      .agg(expr(s"lww_max_by($payloadSql, `$VC`, `$VL`)").as("w"))
+  }
+
+  /** [[lwwByKey]] flattened to the stored row. */
+  private[icelite] def lww(df: DataFrame, keyCol: String): DataFrame =
+    lwwByKey(df, keyCol).select(col("w.*"))
+
+  /** THE bucketed file write: every commit directory the engine writes
+    * (`base-snapshot`, `delta-*`, `base-*`, `compact-*`, `rebucket-*`)
+    * comes from here, so the layout readers rely on — a `__bucket=b`
+    * directory per bucket holding only keys with `bucketOf(key) == b` —
+    * has one producer. `rows` that already carry `__bucket` keep it
+    * (the apply computes it inside its lineage tap).
+    *
+    * `tasks` picks the exchange: 0 = `rows` are already clustered by
+    * bucket (the apply's LWW exchange is the bucket partitioning);
+    * `numBuckets` = hash the key, which IS the bucket function, so task
+    * i writes exactly bucket i; fewer = hash the bucket id, so each
+    * bucket still lands in one task. `clusterBy` sorts each bucket's
+    * rows and `maxRowsPerFile` (0 = unbounded) splits its files, which
+    * keeps per-file zone-map ranges disjoint. The zone-map sidecar is
+    * written before returning, or queued (`asyncSidecar`) so the apply
+    * hot path never reads footers. Returns the written files per bucket.
+    */
+  private[graft] def writeBuckets(rows: DataFrame, root: String, commitRel: String,
+      keyCol: String, numBuckets: Int, tasks: Int, clusterBy: Seq[String] = Nil,
+      maxRowsPerFile: Long = 0L, asyncSidecar: Boolean = false): Map[Int, Seq[String]] = {
+    val bucketed =
+      if (rows.columns.contains("__bucket")) rows
+      else rows.withColumn("__bucket", bucketCol(col(keyCol), numBuckets))
+    val exchanged =
+      if (tasks <= 0) bucketed
+      else if (tasks == numBuckets) bucketed.repartition(numBuckets, col(keyCol))
+      else bucketed.repartition(tasks, col("__bucket"))
+    val clustered =
+      if (clusterBy.isEmpty) exchanged
+      else exchanged.sortWithinPartitions((col("__bucket") +: clusterBy.map(col)): _*)
+    val writer = clustered.write.mode("overwrite").partitionBy("__bucket")
+    (if (maxRowsPerFile > 0) writer.option("maxRecordsPerFile", maxRowsPerFile) else writer)
+      .parquet(s"$root/$commitRel")
+    // listed before the sidecar is queued: an async sidecar's temp file
+    // must not race the walk
+    val written = listCommittedFiles(root, commitRel)
+    if (asyncSidecar) ZoneMaps.writeSidecarAsync(rows.sparkSession, root, commitRel)
+    else ZoneMaps.writeSidecar(rows.sparkSession, root, commitRel)
+    written
+  }
 
   private val mapper = new ObjectMapper()
 
@@ -643,7 +727,7 @@ object IceLite {
     * already committed this version — our optimistic lock; readers never
     * observe a partial file because the link appears fully-written.
     */
-  def writeSnapshotAtomic(root: String, s: IceSnapshot): Boolean = {
+  private[icelite] def writeSnapshotAtomic(root: String, s: IceSnapshot): Boolean = {
     val dir = metaDir(root)
     Files.createDirectories(dir)
     val tmp = dir.resolve(s".tmp-${java.util.UUID.randomUUID()}.json")
@@ -668,7 +752,7 @@ object IceLite {
   /** List data files (relative paths) under a commit directory, grouped
     * by the `__bucket=N` partition dir they were written into.
     */
-  def listCommittedFiles(root: String, commitRel: String): Map[Int, Seq[String]] = {
+  private def listCommittedFiles(root: String, commitRel: String): Map[Int, Seq[String]] = {
     val base = Paths.get(root, commitRel)
     if (!Files.exists(base)) return Map.empty
     val out = scala.collection.mutable.Map[Int, List[String]]().withDefaultValue(Nil)

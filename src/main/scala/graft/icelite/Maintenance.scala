@@ -1,6 +1,7 @@
 package graft.icelite
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 /** Table maintenance: file compaction and tombstone GC.
   *
@@ -15,25 +16,48 @@ import org.apache.spark.sql.functions._
   */
 object Maintenance {
 
-  /** LWW fold of the given data files at `snap`'s semantics: visible
-    * rows only (non-null key, above the truncate floor), one
-    * max-version row per key — tombstones KEPT. The shared core of
-    * compaction and bucket evolution; a change to the fold or floor
-    * semantics lands in both rewrite paths at once.
+  /** Rewrite `files` as fresh per-bucket base files under `commitRel`:
+    * the visible LWW fold at `at` (its schema, truncate floor and bucket
+    * count), tombstones KEPT unless below `retentionFloorLsn` (>= 0).
+    * Compaction, the apply's inline fold and rebucket all rewrite
+    * through here; `tasks` and the rest are [[IceLite.writeBuckets]]'s.
+    * Returns the written files per bucket.
     */
-  private def foldVisible(table: IceLiteTable, snap: IceSnapshot,
-      paths: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val spark = table.spark
-    graft.plans.LwwMaxBy.register(spark)
-    val sm = snap.summary
-    val raw = spark.read.schema(IceLite.withMeta(snap.schema)).parquet(paths: _*)
-      .where(col(snap.keyCol).isNotNull &&
-        (col(IceLite.VC) > sm.truncCommit ||
-          (col(IceLite.VC) === sm.truncCommit && col(IceLite.VL) > sm.truncChange)))
-    val payloadSql = raw.columns.map(c => s"`$c`").mkString("struct(", ", ", ")")
-    raw.groupBy(col(snap.keyCol).as("__k"))
-      .agg(expr(s"lww_max_by($payloadSql, `${IceLite.VC}`, `${IceLite.VL}`)").as("w"))
-      .select(col("w.*"))
+  private[graft] def foldToBase(spark: SparkSession, root: String, at: IceSnapshot,
+      files: Seq[String], commitRel: String, tasks: Int, retentionFloorLsn: Long = -1L,
+      clusterBy: Seq[String] = Nil, maxRowsPerFile: Long = 0L,
+      asyncSidecar: Boolean = false): Map[Int, Seq[String]] = {
+    val raw = spark.read.schema(IceLite.withMeta(at.schema)).parquet(files.map(f => s"$root/$f"): _*)
+    val folded = IceLite.lww(IceLite.visible(raw, at), at.keyCol)
+    val kept =
+      if (retentionFloorLsn < 0) folded
+      else folded.where(!col(IceLite.TOMB) || col(IceLite.VC) >= retentionFloorLsn)
+    IceLite.writeBuckets(kept, root, commitRel, at.keyCol, at.numBuckets, tasks,
+      clusterBy, maxRowsPerFile, asyncSidecar)
+  }
+
+  /** Write tasks for a fold of `buckets` buckets: one per bucket, capped
+    * at the cluster's parallelism.
+    */
+  private[graft] def foldTasks(spark: SparkSession, buckets: Int): Int =
+    math.max(1, math.min(buckets, spark.sparkContext.defaultParallelism))
+
+  /** A bucket's base + delta file set. */
+  private[graft] def filesOf(s: IceSnapshot, b: Int): Set[String] =
+    (s.base.getOrElse(b, Nil) ++ s.deltas.getOrElse(b, Nil)).toSet
+
+  /** Lay a fold's output onto `cur`. `inputs` maps each folded bucket to
+    * the exact file set the fold read. A bucket whose files are still
+    * exactly those takes `folded` as its base (none, if the fold emptied
+    * it) and an empty delta chain; a bucket a concurrent commit touched
+    * keeps `cur`'s files, since its fold would drop that commit's rows.
+    * Returns `cur` with the new layout and the buckets published.
+    */
+  private[graft] def publishFolds(cur: IceSnapshot, inputs: Map[Int, Set[String]],
+      folded: Map[Int, Seq[String]]): (IceSnapshot, Set[Int]) = {
+    val ok = inputs.keySet.filter(b => filesOf(cur, b) == inputs(b))
+    (cur.copy(base = (cur.base -- ok ++ folded.filter(e => ok(e._1))).filter(_._2.nonEmpty),
+      deltas = cur.deltas -- ok), ok)
   }
 
   /** One fold pass over `todo` buckets: read base+deltas, resolve LWW,
@@ -41,10 +65,10 @@ object Maintenance {
     * per-bucket base files, and commit — keeping, per bucket, ONLY the
     * results whose input file set is still exactly what was folded (a
     * concurrent apply that touched a bucket invalidates its fold, never
-    * the whole pass). Returns the buckets actually published. This is
-    * the same changed-file-set safety check the apply path uses for its
-    * inline folds, so compaction is safe to run CONCURRENTLY with
-    * ingest: the loser of any per-bucket race simply refolds later.
+    * the whole pass). Returns the buckets actually published. The
+    * apply's inline fold is this same fold and [[publishFolds]] check,
+    * so compaction is safe to run CONCURRENTLY with ingest: the loser of
+    * any per-bucket race simply refolds later.
     */
   def compactBucketsOnce(table: IceLiteTable, todo: Seq[Int],
       retentionFloorLsn: Long = -1L, clusterBy: Seq[String] = Nil,
@@ -52,67 +76,30 @@ object Maintenance {
     if (todo.isEmpty) return Nil
     val spark = table.spark
     val snap = table.refresh()
-    val keyCol = snap.keyCol
-    val inputs: Map[Int, Set[String]] = todo.map(b =>
-      b -> (snap.base.getOrElse(b, Nil) ++ snap.deltas.getOrElse(b, Nil)).toSet).toMap
-    val paths = todo.flatMap(b => inputs(b)).map(table.dataPath)
-    if (paths.isEmpty) return Nil
+    val inputs: Map[Int, Set[String]] = todo.map(b => b -> filesOf(snap, b)).toMap
+    val files = todo.flatMap(inputs)
+    if (files.isEmpty) return Nil
     val sm = snap.summary
-    val folded0 = foldVisible(table, snap, paths)
-    val folded =
-      if (retentionFloorLsn < 0) folded0
-      else folded0.where(!col(IceLite.TOMB) || col(IceLite.VC) >= retentionFloorLsn)
     val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val commitRel = f"data/compact-${snap.snapshotId}%08d-$attempt"
-    val bucketed = folded
-      .withColumn("__bucket", pmod(hash(col(keyCol)), lit(snap.numBuckets)))
-      .repartition(math.max(1, math.min(todo.size,
-        spark.sparkContext.defaultParallelism)), col("__bucket"))
-    // clusterBy: sort each bucket's rows by the given columns and split
-    // files at maxRowsPerFile, so consecutive files carry DISJOINT value
-    // ranges — zone maps then prune range predicates on those columns to
-    // a few files per bucket (clustering is what makes min/max sharp;
-    // on unsorted data every file spans the whole domain). A bucket's
-    // rows all live in one task after the repartition, so the sorted
-    // runs never interleave across tasks.
-    val clustered =
-      if (clusterBy.isEmpty) bucketed
-      else bucketed.sortWithinPartitions(
-        (col("__bucket") +: clusterBy.map(col)): _*)
-    val writer0 = clustered.write.mode("overwrite").partitionBy("__bucket")
-    val writer =
-      if (maxRowsPerFile > 0) writer0.option("maxRecordsPerFile", maxRowsPerFile)
-      else writer0
-    writer.parquet(table.dataPath(commitRel))
-    ZoneMaps.writeSidecar(spark, table.root, commitRel)
-    val written = IceLite.listCommittedFiles(table.root, commitRel)
-    // optimistic commit: per-bucket validity, retry only on version races
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      val cur = table.refresh()
+    val written = foldToBase(spark, table.root, snap, files,
+      f"data/compact-${snap.snapshotId}%08d-$attempt", foldTasks(spark, todo.size),
+      retentionFloorLsn, clusterBy, maxRowsPerFile)
+    var published = Set.empty[Int]
+    val committed = table.commitWith { cur =>
       // a concurrent TRUNCATE is metadata-only (file sets unchanged) but
       // raises the visibility floor the fold baked in — invalidate all
       if (cur.summary.truncCommit != sm.truncCommit ||
-        cur.summary.truncChange != sm.truncChange) return Nil
-      val safe = written.filter { case (b, _) =>
-        inputs.contains(b) &&
-          (cur.base.getOrElse(b, Nil) ++ cur.deltas.getOrElse(b, Nil)).toSet == inputs(b)
+        cur.summary.truncChange != sm.truncChange) None
+      else {
+        val (laid, ok) = publishFolds(cur, inputs, written)
+        published = ok
+        if (ok.isEmpty) None
+        else Some(laid.copy(
+          changed = Map.empty, // compaction adds no logical changes
+          summary = cur.summary.copy(note = s"compact(purge<$retentionFloorLsn)")))
       }
-      // an empty-after-purge bucket writes no files but is still folded
-      val safeEmpty = todo.filterNot(written.contains).filter(b =>
-        (cur.base.getOrElse(b, Nil) ++ cur.deltas.getOrElse(b, Nil)).toSet == inputs(b))
-      if (safe.isEmpty && safeEmpty.isEmpty) return Nil
-      val next = cur.copy(
-        snapshotId = cur.snapshotId + 1,
-        parentId = cur.snapshotId,
-        base = (cur.base ++ safe -- safeEmpty).filter(_._2.nonEmpty),
-        deltas = (cur.deltas -- safe.keys -- safeEmpty).filter(_._2.nonEmpty),
-        changed = Map.empty, // compaction adds no logical changes
-        summary = cur.summary.copy(note = s"compact(purge<$retentionFloorLsn)"))
-      if (table.commit(next)) return safe.keys.toSeq ++ safeEmpty
     }
-    Nil
+    if (committed.isDefined) published.toSeq.sorted else Nil
   }
 
   /** Buckets worth compacting: any delta chain, a multi-file base, or —
@@ -178,45 +165,33 @@ object Maintenance {
   def rebucket(table: IceLiteTable, newBuckets: Int,
       maxAttempts: Int = 5): Long = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    val spark = table.spark
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
       val snap = table.refresh()
       if (newBuckets == snap.numBuckets) return snap.snapshotId
-      val keyCol = snap.keyCol
-      val paths = snap.buckets.flatMap(b =>
+      val files = snap.buckets.flatMap(b =>
         snap.base.getOrElse(b, Nil) ++ snap.deltas.getOrElse(b, Nil))
-        .map(table.dataPath)
-      val folded =
-        if (paths.isEmpty) null else foldVisible(table, snap, paths)
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val commitRel = f"data/rebucket-${snap.snapshotId}%08d-$tag"
       val written =
-        if (folded == null) Map.empty[Int, Seq[String]]
-        else {
-          folded
-            .withColumn("__bucket", pmod(hash(col(keyCol)), lit(newBuckets)))
-            .repartition(newBuckets, col("__bucket"))
-            .write.mode("overwrite").partitionBy("__bucket")
-            .parquet(table.dataPath(commitRel))
-          ZoneMaps.writeSidecar(spark, table.root, commitRel)
-          IceLite.listCommittedFiles(table.root, commitRel)
-        }
-      val cur = table.refresh()
+        if (files.isEmpty) Map.empty[Int, Seq[String]]
+        else foldToBase(table.spark, table.root, snap.copy(numBuckets = newBuckets),
+          files, commitRel, tasks = newBuckets)
       // strict CAS: any concurrent commit (apply, compaction, truncate)
       // invalidates the whole-table fold — refold against the new state
-      if (cur.snapshotId == snap.snapshotId) {
-        val next = cur.copy(
-          snapshotId = cur.snapshotId + 1,
-          parentId = cur.snapshotId,
+      table.commitWith { cur =>
+        if (cur.snapshotId != snap.snapshotId) None
+        else Some(cur.copy(
           numBuckets = newBuckets,
           base = written,
           deltas = Map.empty,
           changed = Map.empty, // a rebucket adds no logical changes
           summary = cur.summary.copy(
-            note = s"rebucket(${snap.numBuckets}->$newBuckets)"))
-        if (table.commit(next)) return next.snapshotId
+            note = s"rebucket(${snap.numBuckets}->$newBuckets)")))
+      } match {
+        case Some(next) => return next.snapshotId
+        case None =>
       }
       // A losing attempt's files are a WHOLE-TABLE copy (unlike the
       // per-batch delta garbage gcOrphans was sized for) — reclaim them

@@ -127,26 +127,18 @@ class IceLiteBatchWrite(root: String, commitRel: String, dataSchema: StructType,
     val minVc = msgs.map(_.minVc).min
     val maxVc = msgs.map(_.maxVc).max
     // stats sidecar before publishing (commit() runs on the driver)
-    graft.icelite.ZoneMaps.writeSidecar(
-      org.apache.spark.sql.SparkSession.active, root, commitRel)
-    var attempts = 0
-    while (attempts < 20) {
-      val cur = IceLite.readLatest(root).get
-      val next = cur.copy(
-        snapshotId = cur.snapshotId + 1,
-        parentId = cur.snapshotId,
+    val spark = SparkSession.active
+    graft.icelite.ZoneMaps.writeSidecar(spark, root, commitRel)
+    IceLite.load(spark, root).commitWith { cur =>
+      Some(cur.copy(
         deltas = (cur.deltas.keySet ++ written.keySet).map { b =>
           b -> (cur.deltas.getOrElse(b, Nil) ++ written.getOrElse(b, Nil))
         }.toMap.filter(_._2.nonEmpty),
         changed = written, // CDF: a v2 insert IS a change commit
         summary = cur.summary.copy(
           upserts = ups, deletes = dels, lsnLo = minVc, lsnHi = maxVc,
-          note = "v2-append"))
-      if (IceLite.writeSnapshotAtomic(root, next)) return
-      attempts += 1
+          note = "v2-append")))
     }
-    throw new IllegalStateException(
-      s"v2 append: commit contention, gave up after $attempts attempts")
   }
 
   /** Failed attempts leave only unreferenced files in the attempt-unique
@@ -218,8 +210,7 @@ class IceLiteDataWriter(root: String, commitRel: String, dataSchema: StructType,
       "v2 append: key column must be non-null (null-key truncate markers are engine-internal)")
     require(!row.isNullAt(vcIdx) && !row.isNullAt(vlIdx) && !row.isNullAt(tombIdx),
       "v2 append: __vc/__vl/__tomb must be non-null (use IceLiteV2.append)")
-    val key = row.getUTF8String(keyIdx)
-    val b = ((key.hashCode() % numBuckets) + numBuckets) % numBuckets
+    val b = IceLite.bucketOf(row.getUTF8String(keyIdx), numBuckets)
     if (row.getBoolean(tombIdx)) deletes += 1 else upserts += 1
     val vc = row.getLong(vcIdx)
     if (vc < minVc) minVc = vc

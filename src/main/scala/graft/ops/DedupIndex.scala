@@ -64,7 +64,7 @@ object DedupIndex {
     // distinct BUCKET ids of the batch (≤ numBuckets ints — driver-safe
     // at any batch size, unlike collecting keys)
     val buckets = fps
-      .select(pmod(hash(col(FpCol)), lit(snap.numBuckets)).cast("int").as("b"))
+      .select(IceLite.bucketCol(col(FpCol), snap.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val idx = index.readMerged(buckets)
       .where(!col(IceLite.TOMB))

@@ -210,7 +210,7 @@ object NearDupIndex {
     // distinct BUCKET ids (≤ numBuckets ints — driver-safe at any batch
     // size, the DedupIndex.probe discipline)
     val buckets = br
-      .select(pmod(hash(col("bb")), lit(bsnap.numBuckets)).cast("int").as("b"))
+      .select(IceLite.bucketCol(col("bb"), bsnap.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val bandIdx = idx.bands.readMerged(buckets)
       .where(!col(IceLite.TOMB)).select(col("bb"), col("members"))
@@ -225,7 +225,7 @@ object NearDupIndex {
       .persist()
     val ssnap = idx.sigs.refresh()
     val candBuckets = cand
-      .select(pmod(hash(col("dup_of")), lit(ssnap.numBuckets)).cast("int").as("b"))
+      .select(IceLite.bucketCol(col("dup_of"), ssnap.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val sigIdx = idx.sigs.readMerged(candBuckets)
       .where(!col(IceLite.TOMB))
@@ -281,7 +281,7 @@ object NearDupIndex {
     val br = bandRows(sg)
     val bsnap = idx.bands.refresh()
     val buckets = br
-      .select(pmod(hash(col("bb")), lit(bsnap.numBuckets)).cast("int").as("b"))
+      .select(IceLite.bucketCol(col("bb"), bsnap.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val touched = idx.bands.readMerged(buckets)
       .where(!col(IceLite.TOMB)).select(col("bb"), col("members"))

@@ -300,29 +300,19 @@ object CdcJob {
       .withColumn(IceLite.VC, lit(snapshotLsn))
       .withColumn(IceLite.VL, lit(Long.MaxValue))
       .withColumn(IceLite.TOMB, lit(false))
-      .withColumn("__bucket", pmod(hash(col(cfg.keyCol)), lit(cfg.numBuckets)))
-    val commitRel = "data/base-snapshot"
     // row count observed ON the write — a 100 TB initial snapshot must be
     // exactly ONE pass over the source, never a second count scan.
-    // The bucket repartition (the SAME HashPartitioning the delta write
-    // uses — pmod(hash(key), n) IS the bucket function) makes the base
-    // layout bucket-aligned: ONE file per bucket, instead of the
-    // inputPartitions x buckets file explosion a bare partitionBy
-    // produces (at cluster scale that is millions of tiny base files;
-    // every merged read and compaction pays for them forever).
+    // One write task per bucket (the key's HashPartitioning IS the
+    // bucket function) makes the base layout bucket-aligned: ONE file
+    // per bucket, instead of the inputPartitions x buckets file
+    // explosion a bare partitionBy produces (at cluster scale that is
+    // millions of tiny base files; every merged read and compaction
+    // pays for them forever).
     val obs = org.apache.spark.sql.Observation()
-    if (cfg.snapshotMode != SnapshotMode.NoData) {
-      rows.repartition(cfg.numBuckets, col(cfg.keyCol))
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .parquet(s"${cfg.tableRoot}/$commitRel")
-    }
     val files =
       if (cfg.snapshotMode == SnapshotMode.NoData) Map.empty[Int, Seq[String]]
-      else {
-        graft.icelite.ZoneMaps.writeSidecar(spark, cfg.tableRoot, commitRel)
-        IceLite.listCommittedFiles(cfg.tableRoot, commitRel)
-      }
+      else IceLite.writeBuckets(rows.observe(obs, count(lit(1)).as("n")), cfg.tableRoot,
+        "data/base-snapshot", cfg.keyCol, cfg.numBuckets, tasks = cfg.numBuckets)
     val nRows =
       if (cfg.snapshotMode == SnapshotMode.NoData) 0L
       else obs.get.get("n") match {

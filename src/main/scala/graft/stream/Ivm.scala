@@ -129,7 +129,7 @@ object Ivm {
     // ints, driver-safe at any batch size) prune the replica read; the
     // batch side broadcasts — the replica is never shuffled
     val bkts = incoming
-      .select(pmod(hash(col(keyCol)), lit(rSnap.numBuckets)).cast("int").as("b"))
+      .select(IceLite.bucketCol(col(keyCol), rSnap.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val oldC = contrib(replica.readMerged(bkts), keyCol, vd, "o_")
       .join(broadcast(incoming.select(col(keyCol).as("o_k")).distinct()),

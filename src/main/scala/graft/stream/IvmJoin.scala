@@ -121,7 +121,7 @@ object IvmJoin {
     val snap = rep.current
     val keyCol = snap.keyCol
     val bkts = ch
-      .select(pmod(hash(col(keyCol)), lit(snap.numBuckets)).cast("int").as("b"))
+      .select(IceLite.bucketCol(col(keyCol), snap.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val old = rep.readMerged(bkts)
       .select(col(keyCol).as("__ok"), col(IceLite.VC).as("__oc"),

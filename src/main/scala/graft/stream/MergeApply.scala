@@ -1,6 +1,6 @@
 package graft.stream
 
-import graft.icelite.{IceLite, IceLiteTable, IceSnapshot, IceSummary}
+import graft.icelite.{IceLite, IceLiteTable, IceSnapshot, IceSummary, Maintenance}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -266,9 +266,9 @@ object MergeApply {
       (changeCols ++ Seq(
         col("__cvc").as(VC), col("__cvl").as(VL), (col("__op") === "d").as(TOMB),
         col("__op"), col("__trunc"), col("__cnt"), col("__minc"))): _*)
-      .withColumn("__bucket", expr(
-        s"graft_stats_tap(coalesce(pmod(hash(`$keyCol`), $numBuckets), 0), " +
-          s"`$keyCol` is null, __cnt, __op = 'd', __minc, `$VC`, `$VL`)"))
+      .withColumn("__bucket", call_function("graft_stats_tap",
+        coalesce(IceLite.bucketCol(col(keyCol), numBuckets), lit(0)), col(keyCol).isNull,
+        col("__cnt"), col("__op") === "d", col("__minc"), col(VC), col(VL)))
 
     // batch statistics are observed DURING the write (CollectMetrics on
     // the write plan) — no separate stats pass blocks the commit
@@ -277,7 +277,6 @@ object MergeApply {
       count(when(col(keyCol).isNotNull, lit(1))).as("n_keys"),
       sum(when(col(keyCol).isNotNull && col("__op") === "d", 1L).otherwise(0L)).as("n_del"),
       sum(when(col(keyCol).isNotNull, col("__cnt")).otherwise(0L)).as("n_events"),
-      sum(col("__cnt")).as("n_all"),
       min(when(col(keyCol).isNotNull, col("__minc"))).as("lsn_lo"),
       max(struct(col(VC), col(VL))).as("max_pos"),
       max(col("__trunc")).as("trunc_pos"))
@@ -300,8 +299,10 @@ object MergeApply {
     *                      apply (default). With a [[graft.icelite
     *                      .Maintenance.CompactionDaemon]] running, pass
     *                      false: the fold happens concurrently off the
-    *                      batch latency path, protected by the same
-    *                      changed-file-set commit check.
+    *                      batch latency path. Both are the same code:
+    *                      `Maintenance.foldToBase` and the per-bucket
+    *                      unchanged-file-set check of
+    *                      `Maintenance.publishFolds`.
     */
   def applyBatch(table: IceLiteTable, events: DataFrame, batchId: Long,
       signalChannel: Boolean = false, inlineCompact: Boolean = true): MergeStats = {
@@ -332,13 +333,11 @@ object MergeApply {
     val channelTag = if (signalChannel) "sig-" else ""
     val attemptTag = java.util.UUID.randomUUID().toString.take(8)
     val commitRel = f"data/delta-$channelTag$batchId%08d-$attemptTag"
-    phase(t0, "job1-dedup-write")(
-      observed.write.mode("overwrite").partitionBy("__bucket")
-        .parquet(table.dataPath(commitRel)))
-    val written = phase(t0, "list-files")(IceLite.listCommittedFiles(table.root, commitRel))
-    // zone-map sidecar rides the daemon, not the measured batch; a
-    // losing attempt's sidecar is unreferenced garbage like its files
-    graft.icelite.ZoneMaps.writeSidecarAsync(spark, table.root, commitRel)
+    // the LWW exchange already clustered the rows by bucket (tasks = 0);
+    // the zone-map sidecar rides the daemon, not the measured batch, and
+    // a losing attempt's sidecar is unreferenced garbage like its files
+    val written = phase(t0, "job1-dedup-write")(IceLite.writeBuckets(observed,
+      table.root, commitRel, keyCol, snap.numBuckets, tasks = 0, asyncSidecar = true))
 
     val m = phase(t0, "obs-get")(obs.get)
     def mLong(k: String, dflt: Long): Long = m.get(k) match {
@@ -354,14 +353,11 @@ object MergeApply {
     val nKeys = mLong("n_keys", 0L)
     val nDel = mLong("n_del", 0L)
     val nEvents = mLong("n_events", 0L)
-    val nAll = mLong("n_all", 0L)
     val maxPos = mPos("max_pos")
     val truncPos = mPos("trunc_pos")
     val nUpserts = nKeys - nDel
     val lsnLoOut = mLong("lsn_lo", -1L)
     val lsnHi = maxPos.map(_._1).getOrElse(-1L)
-    val numBuckets = snap.numBuckets
-    locally { val _ = nAll } // observed for diagnostics only
 
     // monotone advances
     val (wmC, wmL) = maxPos match {
@@ -377,81 +373,56 @@ object MergeApply {
 
     // ---- opportunistic compaction: buckets whose delta chain reaches
     // the threshold fold base+deltas into a fresh base (bounded read
-    // amplification; amortized O(table/threshold) per batch). Truncated
-    // and null-key marker rows are purged during the fold. ----
+    // amplification; amortized O(table/threshold) per batch), published
+    // in this same commit. Truncated and null-key marker rows are purged
+    // during the fold. It is compaction's own fold and per-bucket
+    // publish check, at this batch's schema and truncate floor. ----
     val cur0 = table.current
     val toCompact: Seq[Int] =
       if (!inlineCompact) Nil
       else written.keys.toSeq.filter { b =>
         cur0.deltas.getOrElse(b, Nil).size + written.getOrElse(b, Nil).size >= maxDeltaChain
       }
-    // record the exact pre-existing file set each compaction folds, so
-    // the commit can detect a concurrent writer changing those buckets
-    // underneath us and fall back to a written-only commit for them
-    val compactInputs: Map[Int, Set[String]] = toCompact.map(b =>
-      b -> (cur0.base.getOrElse(b, Nil) ++ cur0.deltas.getOrElse(b, Nil)).toSet).toMap
+    val compactInputs: Map[Int, Set[String]] =
+      toCompact.map(b => b -> Maintenance.filesOf(cur0, b)).toMap
     val compacted: Map[Int, Seq[String]] =
       if (toCompact.isEmpty) Map.empty
-      else phase(t0, "compact") {
-        val paths = toCompact.flatMap(b =>
-          cur0.base.getOrElse(b, Nil) ++ cur0.deltas.getOrElse(b, Nil) ++
-            written.getOrElse(b, Nil)).map(table.dataPath)
-        val raw = spark.read.schema(IceLite.withMeta(newSchema)).parquet(paths: _*)
-          .where(col(keyCol).isNotNull && posGt(col(VC), col(VL), trC, trL))
-        val payloadSql = raw.columns.map(c => s"`$c`").mkString("struct(", ", ", ")")
-        val folded = raw.groupBy(col(keyCol).as("__k"))
-          .agg(expr(s"lww_max_by($payloadSql, `$VC`, `$VL`)").as("w"))
-          .select(col("w.*"))
-          .withColumn("__bucket", pmod(hash(col(keyCol)), lit(numBuckets)))
-        val compactRel = f"data/base-$channelTag$batchId%08d-$attemptTag"
-        val bucketed = folded.repartition(math.max(1, math.min(toCompact.size,
-          spark.sparkContext.defaultParallelism)), col("__bucket"))
-        val clustered =
-          if (clusterBy.isEmpty) bucketed
-          else bucketed.sortWithinPartitions((col("__bucket") +: clusterBy.map(col)): _*)
-        val w0 = clustered.write.mode("overwrite").partitionBy("__bucket")
-        (if (clusterMaxRowsPerFile > 0)
-          w0.option("maxRecordsPerFile", clusterMaxRowsPerFile) else w0)
-          .parquet(table.dataPath(compactRel))
-        graft.icelite.ZoneMaps.writeSidecarAsync(spark, table.root, compactRel)
-        IceLite.listCommittedFiles(table.root, compactRel)
-      }
+      else phase(t0, "compact")(Maintenance.foldToBase(spark, table.root,
+        cur0.copy(schema = newSchema, summary = sm.copy(truncCommit = trC, truncChange = trL)),
+        toCompact.flatMap(b => cur0.base.getOrElse(b, Nil) ++ cur0.deltas.getOrElse(b, Nil) ++
+          written.getOrElse(b, Nil)),
+        f"data/base-$channelTag$batchId%08d-$attemptTag", Maintenance.foldTasks(spark, toCompact.size),
+        clusterBy = clusterBy, maxRowsPerFile = clusterMaxRowsPerFile, asyncSidecar = true))
 
-    // ---- snapshot commit (atomic, idempotent, optimistic retry) ----
-    var snapId = -1L
-    val committed = phase(t0, "commit")(commitWithRetry(table, batchId, signalChannel) { cur =>
-      // a compaction result is only publishable for buckets whose file
-      // set is still exactly what it folded; a concurrent commit that
-      // touched a bucket invalidates the fold for that bucket (its
-      // output would silently drop the other writer's rows)
-      val safeCompacted = compacted.filter { case (b, _) =>
-        (cur.base.getOrElse(b, Nil) ++ cur.deltas.getOrElse(b, Nil)).toSet ==
-          compactInputs.getOrElse(b, Set.empty[String])
+    // ---- snapshot commit (atomic, idempotent, optimistic retry): on a
+    // lost race the idempotency gate is re-checked (a concurrent
+    // duplicate driver may have committed this batch). Single logical
+    // writer is the normal mode (the reference is single-task by design,
+    // `InformixConnector.java:53-58`); the retry exists so a zombie
+    // driver can never double-apply. ----
+    val committedSnap = phase(t0, "commit")(table.commitWith { cur =>
+      val last = if (signalChannel) cur.summary.lastSignalBatchId else cur.summary.lastBatchId
+      if (batchId <= last) None
+      else {
+        val (laid, folded) = Maintenance.publishFolds(cur, compactInputs, compacted)
+        val note =
+          if (truncPos.isDefined) "truncate" else if (nKeys == 0L) "empty" else ""
+        Some(laid.copy(
+          schema = newSchema,
+          deltas = laid.deltas ++ written.collect { case (b, fs) if !folded(b) =>
+            b -> (laid.deltas.getOrElse(b, Nil) ++ fs) },
+          // CDF manifest: what this apply wrote, even where folded into base
+          changed = written,
+          summary = IceSummary(batchId,
+            if (signalChannel) cur.summary.lastBatchId else batchId,
+            if (signalChannel) batchId else cur.summary.lastSignalBatchId,
+            wmC, wmL,
+            sm.floorCommit, sm.floorChange, trC, trL,
+            lsnLoOut, lsnHi, nUpserts, nDel, note)))
       }
-      val nb = cur.base ++ safeCompacted
-      val nd = (cur.deltas.keySet ++ written.keySet).map { b =>
-        b -> (if (safeCompacted.contains(b)) Seq.empty[String]
-              else cur.deltas.getOrElse(b, Nil) ++ written.getOrElse(b, Nil))
-      }.toMap.filter(_._2.nonEmpty)
-      val note =
-        if (truncPos.isDefined) "truncate" else if (nKeys == 0L) "empty" else ""
-      val s = cur.copy(
-        snapshotId = cur.snapshotId + 1,
-        parentId = cur.snapshotId,
-        schema = newSchema,
-        base = nb.filter(_._2.nonEmpty),
-        deltas = nd,
-        // CDF manifest: what this apply wrote, even where folded into base
-        changed = written.filter(_._2.nonEmpty),
-        summary = IceSummary(batchId,
-          if (signalChannel) cur.summary.lastBatchId else batchId,
-          if (signalChannel) batchId else cur.summary.lastSignalBatchId,
-          wmC, wmL,
-          sm.floorCommit, sm.floorChange, trC, trL,
-          lsnLoOut, lsnHi, nUpserts, nDel, note))
-      snapId = s.snapshotId
-      s
     })
+    val committed = committedSnap.isDefined
+    val snapId = committedSnap.fold(-1L)(_.snapshotId)
 
     // ---- per-bucket lineage rows (E5/E6), zero extra Spark jobs: the
     // statistics were accumulated inside the write job; the rows are a
@@ -467,27 +438,5 @@ object MergeApply {
 
     MergeStats(batchId, committed, alreadyApplied = !committed,
       nEvents, nUpserts, nDel, truncPos.isDefined, lsnLoOut, lsnHi, snapId)
-  }
-
-  /** Optimistic commit loop: on version conflict, refresh and re-check
-    * the idempotency gate (a concurrent duplicate driver may have
-    * committed our batch), then rebuild against the new current version.
-    * Single logical writer is the normal mode (the reference is
-    * single-task by design, `InformixConnector.java:53-58`); this loop
-    * exists so a zombie driver can never double-apply.
-    */
-  private def commitWithRetry(table: IceLiteTable, batchId: Long,
-      signalChannel: Boolean = false)(
-      build: IceSnapshot => IceSnapshot): Boolean = {
-    var attempts = 0
-    while (attempts < 20) {
-      val cur = table.current
-      val last = if (signalChannel) cur.summary.lastSignalBatchId else cur.summary.lastBatchId
-      if (batchId <= last) return false
-      if (table.commit(build(cur))) return true
-      table.refresh()
-      attempts += 1
-    }
-    throw new IllegalStateException(s"commit contention: gave up after $attempts attempts")
   }
 }

@@ -64,7 +64,7 @@ object Scd2Maintain {
     // fresh versions only (strictly above the stored current version);
     // bucket-pruned replica read, batch side broadcasts
     val bkts = feed
-      .select(pmod(hash(col(keyCol)), lit(snap.numBuckets)).cast("int").as("b"))
+      .select(IceLite.bucketCol(col(keyCol), snap.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val pre = rep.readMerged(bkts)
       .join(broadcast(feed.select(col(keyCol)).distinct()), Seq(keyCol), "left_semi")

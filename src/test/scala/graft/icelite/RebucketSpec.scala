@@ -35,12 +35,7 @@ class RebucketSpec extends SparkSpec {
       assert(snap.buckets.forall(b => b >= 0 && b < 16))
       assert(snap.summary.lastBatchId == gate, "batch-id gate must carry over")
       // every row sits in the bucket the NEW function assigns
-      snap.buckets.foreach { b =>
-        val keys = s.read.schema(IceLite.withMeta(snap.schema))
-          .parquet(snap.base(b).map(t.dataPath): _*)
-          .select(col(snap.keyCol)).as[String].collect()
-        assert(keys.forall(k => IceLite.bucketOf(k, 16) == b))
-      }
+      BucketLayout.check(t, "data/rebucket-")
 
       CdcJob.runBatchIncremental(s, t, cdc, filesPerBatch = 1)
       val initial = (0L until cfg.nDocs.toLong).map { k =>

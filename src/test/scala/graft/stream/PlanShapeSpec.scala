@@ -13,6 +13,15 @@ import graft.util.Fs
   */
 class PlanShapeSpec extends SparkSpec {
 
+  /** Run `f` with the merge-on-read small-read floor at `v`; the old
+    * floor is restored even when `f` fails.
+    */
+  private def withSmallReadFloor[T](v: Long)(f: => T): T = {
+    val prev = graft.icelite.IceLite.smallMergedReadBytes
+    graft.icelite.IceLite.smallMergedReadBytes = v
+    try f finally graft.icelite.IceLite.smallMergedReadBytes = prev
+  }
+
   private def planOf(broadcastAssembly: Boolean): String = {
     val cfg = ChangeLogConfig(nTx = 60, nDocs = 40, seed = 103)
     val base = Fs.tempDir("graft-plan")
@@ -81,13 +90,11 @@ class PlanShapeSpec extends SparkSpec {
     assert(table.refresh().deltas.values.exists(_.nonEmpty), "fixture needs delta chains")
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // zero the small-read floor: this spec pins the AT-SCALE plan shape
-    // (a dirty bucket's base at 100 TB always exceeds the floor); the
-    // small path is pinned by the next spec
-    val prevSmall = graft.icelite.IceLite.smallMergedReadBytes
-    graft.icelite.IceLite.smallMergedReadBytes = 0L
     try {
-      val plan = table.read().queryExecution.executedPlan
+      // zero the small-read floor: this spec pins the AT-SCALE plan shape
+      // (a dirty bucket's base at 100 TB always exceeds the floor); the
+      // small path is pinned by the next spec
+      val plan = withSmallReadFloor(0L)(table.read().queryExecution.executedPlan)
       val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
       // the delta LWW and the touched-rows LWW — both O(delta), never O(table)
       assert(shuffles.size == 2, s"expected exactly 2 delta-scale shuffles:\n$plan")
@@ -109,26 +116,19 @@ class PlanShapeSpec extends SparkSpec {
 
       // small-read fast path (fixture-sized dirty set): ONE global LWW
       // exchange, no broadcast split — and bit-identical rows
-      graft.icelite.IceLite.smallMergedReadBytes = 8L << 20
-      val splitRows = {
-        graft.icelite.IceLite.smallMergedReadBytes = 0L
-        val r = table.read().orderBy("doc_id").collect().toSeq
-        graft.icelite.IceLite.smallMergedReadBytes = 8L << 20
-        r
+      val splitRows = withSmallReadFloor(0L)(table.read().orderBy("doc_id").collect().toSeq)
+      withSmallReadFloor(8L << 20) {
+        val smallPlanDf = table.read()
+        val smallPlan = smallPlanDf.queryExecution.executedPlan
+        val smallShuffles = smallPlan.collect { case e: ShuffleExchangeExec => e }
+        assert(smallShuffles.size == 1,
+          s"small merged read should be ONE global LWW exchange:\n$smallPlan")
+        assert(smallPlan.collect { case j: BroadcastHashJoinExec => j }.isEmpty,
+          s"small merged read should have no broadcast split:\n$smallPlan")
+        assert(smallPlanDf.orderBy("doc_id").collect().toSeq == splitRows,
+          "small-path rows must equal broadcast-path rows")
       }
-      val smallPlanDf = table.read()
-      val smallPlan = smallPlanDf.queryExecution.executedPlan
-      val smallShuffles = smallPlan.collect { case e: ShuffleExchangeExec => e }
-      assert(smallShuffles.size == 1,
-        s"small merged read should be ONE global LWW exchange:\n$smallPlan")
-      assert(smallPlan.collect { case j: BroadcastHashJoinExec => j }.isEmpty,
-        s"small merged read should have no broadcast split:\n$smallPlan")
-      assert(smallPlanDf.orderBy("doc_id").collect().toSeq == splitRows,
-        "small-path rows must equal broadcast-path rows")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prev)
-      graft.icelite.IceLite.smallMergedReadBytes = prevSmall
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
     Fs.deleteRecursively(base)
   }
 
